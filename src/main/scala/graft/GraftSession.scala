@@ -46,6 +46,11 @@ object GraftSession {
       // no-data batch to emit windows past the watermark (WatermarkSpec
       // fails without it; disabling bought <10% anyway)
       .config("spark.sql.streaming.minBatchesToRetain", "2")
+      // checkpoint writes (offsets, commits, metadata, state-store deltas
+      // and snapshots) through java.nio on local paths: Hadoop's local
+      // filesystem forks a `chmod` per file created without libhadoop
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        classOf[graft.streaming.LocalCheckpointFileManager].getName)
       // Replay-harness envelope: the verify/bench streaming replays drain
       // tail batches into a MEMORY sink (driver-resident by construction),
       // and at the factor-100 rehearsal one replay totals ~2 GiB of

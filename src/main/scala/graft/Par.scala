@@ -33,9 +33,11 @@ package graft
  * correctly attributed in the UI regardless of thread reuse.
  *
  * Failure contract: if the caller-thread leg throws, the async legs are
- * cancelled if not yet started and AWAITED if running (their failures
- * swallowed — sequential code would never have reached them), so no
- * detached Spark job keeps running behind a propagated exception.
+ * AWAITED for up to [[DrainBoundMs]] (their failures swallowed —
+ * sequential code would never have reached them), so no detached Spark
+ * job keeps running behind a propagated exception; a leg still running
+ * at the bound is interrupted and the caller's exception is rethrown, so
+ * a wedged leg cannot turn a prompt failure into a hang.
  */
 object Par {
 
@@ -57,8 +59,11 @@ object Par {
       .map(_.sparkContext)
       .filterNot(_.isStopped)
 
+  /** How long a failed caller leg waits, in total, for its async legs. */
+  private[graft] val DrainBoundMs: Long = 60L * 1000
+
   /** Submit a thunk carrying the caller's Spark job attribution. */
-  private def submit[A](body: => A): java.util.concurrent.Future[A] = {
+  private[graft] def submit[A](body: => A): java.util.concurrent.Future[A] = {
     val captured: Seq[(String, String)] = activeContext match {
       case Some(sc) => SparkLocalProps.flatMap(k => Option(sc.getLocalProperty(k)).map(k -> _))
       case None     => Nil
@@ -79,18 +84,29 @@ object Par {
   /** Run `a` on the caller thread; on failure AWAIT the async legs before
     * rethrowing so no Spark job keeps running detached behind the
     * propagated exception (their own failures are swallowed — sequential
-    * code would never have reached them). No cancel(): the cached pool
-    * hands every task to a thread at submit (no queue, so there is no
+    * code would never have reached them). The wait shares one deadline,
+    * `drainMs` from the failure: a leg still running then is interrupted
+    * (cancel(true)) and left behind, and the caller's exception is
+    * rethrown. No cancel() before the deadline: the cached pool hands
+    * every task to a thread at submit (no queue, so there is no
     * not-yet-started task to prevent), and FutureTask.cancel marks a
     * RUNNING task cancelled without stopping it — get() would then return
     * immediately while the leg's job kept running, exactly the detached
     * work this drain exists to prevent. */
-  private def callerLeg[A](a: => A, outstanding: java.util.concurrent.Future[_]*): A =
+  private[graft] def callerLeg[A](
+      a: => A, drainMs: Long, outstanding: java.util.concurrent.Future[_]*): A =
     try a
     catch {
       case e: Throwable =>
+        val deadline = System.nanoTime() + drainMs * 1000000L
         outstanding.foreach { f =>
-          try { f.get(); () } catch { case _: Throwable => () }
+          try {
+            f.get(math.max(0L, deadline - System.nanoTime()), java.util.concurrent.TimeUnit.NANOSECONDS)
+            ()
+          } catch {
+            case _: java.util.concurrent.TimeoutException => f.cancel(true); ()
+            case _: Throwable                             => ()
+          }
         }
         throw e
     }
@@ -98,7 +114,7 @@ object Par {
   /** Evaluate two independent thunks concurrently; return both. */
   def both[A, B](a: => A, b: => B): (A, B) = {
     val fb = submit(b)
-    val ra = callerLeg(a, fb) // caller thread does half the work — one pool leg for the pair
+    val ra = callerLeg(a, DrainBoundMs, fb) // caller thread does half the work — one pool leg for the pair
     (ra, join(fb))
   }
 
@@ -106,7 +122,7 @@ object Par {
   def all3[A, B, C](a: => A, b: => B, c: => C): (A, B, C) = {
     val fb = submit(b)
     val fc = submit(c)
-    val ra = callerLeg(a, fb, fc)
+    val ra = callerLeg(a, DrainBoundMs, fb, fc)
     (ra, join(fb), join(fc))
   }
 

@@ -71,6 +71,20 @@ object EventFeed {
   /** One materialized feed row: (event_id, ts_micros, user_id, event_type, value, props). */
   type FeedRow = (Long, java.lang.Long, java.lang.Long, String, java.lang.Double, String)
 
+  /** The options that decide which rows [[load]] returns. */
+  final case class LoadParams(path: String, startingTimestamp: Option[String], maxFeedRows: Long)
+
+  object LoadParams {
+    def from(options: CaseInsensitiveStringMap): LoadParams = LoadParams(
+      Option(options.get("path")).getOrElse(
+        throw new IllegalArgumentException("eventfeed: 'path' option is required")),
+      Option(options.get("startingTimestamp")),
+      Option(options.get("maxFeedRows")).map(_.toLong).getOrElse(DefaultMaxFeedRows))
+  }
+
+  /** An in-flight [[prefetch]], tagged with the parameters it loads. */
+  final case class Prefetched(params: LoadParams, rows: () => Array[FeedRow])
+
   /** One-shot PREFETCH of [[load]], started on a daemon thread the moment
     * the source table is constructed (i.e. at `readStream.load()` time):
     * the feed collect is driver-blocking Spark work that is independent of
@@ -81,24 +95,21 @@ object EventFeed {
     * start) triggers its own full load from parquet; the thunk merely
     * hands the one in-flight result to the one stream that consumes it.
     * Failures surface at consumption, exactly where the inline load threw. */
-  def prefetch(
-      path: String,
-      startingTimestamp: Option[String],
-      maxFeedRows: Long): () => Array[FeedRow] = {
+  def prefetch(params: LoadParams): Prefetched = {
     val session = SparkSession.active // capture on the constructing thread
     val fut = new java.util.concurrent.FutureTask[Array[FeedRow]](() => {
       SparkSession.setActiveSession(session)
-      load(path, startingTimestamp, maxFeedRows)
+      load(params.path, params.startingTimestamp, params.maxFeedRows)
     })
     val t = new Thread(fut, "graft-feed-prefetch")
     t.setDaemon(true)
     t.start()
-    () =>
+    Prefetched(params, () =>
       try fut.get()
       catch {
         case e: java.util.concurrent.ExecutionException if e.getCause != null =>
           throw e.getCause
-      }
+      })
   }
 
   /** Load + order the feed driver-side (the poll-loop emulation).
@@ -173,12 +184,7 @@ class EventFeedTable(options: CaseInsensitiveStringMap) extends Table with Suppo
   // batch-0 planning have run CONCURRENTLY with the collect instead of
   // after it — see [[EventFeed.prefetch]]. One prefetch per table = per
   // stream start; a table whose stream never starts wastes one bounded load.
-  private val prefetched: () => Array[EventFeed.FeedRow] =
-    EventFeed.prefetch(
-      Option(options.get("path")).getOrElse(
-        throw new IllegalArgumentException("eventfeed: 'path' option is required")),
-      Option(options.get("startingTimestamp")),
-      Option(options.get("maxFeedRows")).map(_.toLong).getOrElse(EventFeed.DefaultMaxFeedRows))
+  private val prefetched = EventFeed.prefetch(EventFeed.LoadParams.from(options))
   override def name(): String = s"event_feed(${options.get("path")})"
   override def schema(): StructType = EventFeed.Schema
   override def capabilities(): util.Set[TableCapability] =
@@ -189,21 +195,24 @@ class EventFeedTable(options: CaseInsensitiveStringMap) extends Table with Suppo
     }
 }
 
+/** The scan reads its own scan-time options; the table's prefetch is used
+  * only when it was loaded with the same load parameters, and the stream
+  * loads inline otherwise — a prefetch of other rows is never served. */
 class EventFeedScan(
     options: CaseInsensitiveStringMap,
-    prefetched: Option[() => Array[EventFeed.FeedRow]] = None) extends Scan {
+    prefetched: Option[EventFeed.Prefetched] = None) extends Scan {
   override def readSchema(): StructType = EventFeed.Schema
-  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
+  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
+    val params = EventFeed.LoadParams.from(options)
     new EventFeedMicroBatchStream(
-      path = Option(options.get("path")).getOrElse(
-        throw new IllegalArgumentException("eventfeed: 'path' option is required")),
+      path = params.path,
       maxBatchSize =
         Option(options.get("maxBatchSize")).map(_.toInt).getOrElse(EventFeed.DefaultMaxBatchSize),
-      startingTimestamp = Option(options.get("startingTimestamp")),
-      maxFeedRows =
-        Option(options.get("maxFeedRows")).map(_.toLong).getOrElse(EventFeed.DefaultMaxFeedRows),
-      prefetched = prefetched
+      startingTimestamp = params.startingTimestamp,
+      maxFeedRows = params.maxFeedRows,
+      prefetched = prefetched.filter(_.params == params).map(_.rows)
     )
+  }
 }
 
 /** Stream offset = count of feed rows emitted so far (dense row index). */

@@ -3,7 +3,7 @@ package graft.sources
 import java.util
 import java.util.concurrent.ConcurrentHashMap
 
-import graft.operators.EventLog.OutOfRange
+import graft.operators.EventLog.{LogRange, OutOfRange}
 import graft.streaming.OffsetLog
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -63,6 +63,12 @@ object LogTail {
     * ~64 MiB — one healthy task, so a factor-100 replay batch (2.5M rows)
     * fans out to ~39 tasks instead of one 1.8 GiB task. */
   val SliceRows: Int = 65536
+
+  /** The reference's 400 for an offset below the log's retention. */
+  def outOfRange(offset: Long, r: LogRange, detail: String = ""): IllegalArgumentException =
+    new IllegalArgumentException(
+      s"invalid offset: $offset out of range [${r.earliest}, ${r.latest}] ($OutOfRange)" +
+        (if (detail.isEmpty) "" else s": $detail"))
 }
 
 class LogTailTable(options: CaseInsensitiveStringMap) extends Table with SupportsRead {
@@ -105,10 +111,8 @@ class LogTailMicroBatchStream(
     startingOffset match {
       case None => LogCursor(r.latest + 1) // only-new-events default
       case Some(s) =>
-        if (!r.isEmpty && s < r.earliest)
-          // the reference's 400 on a purged start offset
-          throw new IllegalArgumentException(
-            s"invalid offset: $s out of range [${r.earliest}, ${r.latest}] (${OutOfRange})")
+        // the reference's 400 on a purged start offset
+        if (!r.isEmpty && s < r.earliest) throw LogTail.outOfRange(s, r)
         LogCursor(s)
     }
   }
@@ -154,12 +158,22 @@ class LogTailMicroBatchStream(
     if (e <= s) Array.empty
     else {
       // snapshot the records driver-side (the log is an in-process serving
-      // structure; a purged offset inside the window is skipped, mirroring
-      // the page scan's skip semantics server.go:236-238), then ship the
-      // batch via TorrentBroadcast — the partition descriptor stays tiny
-      // instead of dragging up-to-maxBatchSize records through task
-      // serialization (~4 MiB/task warnings at sf0.1)
-      val rows = (s until e).flatMap(o => log.read(o).toOption.map(b => (o, new String(b, "UTF-8"))))
+      // structure), then ship the batch via TorrentBroadcast — the
+      // partition descriptor stays tiny instead of dragging
+      // up-to-maxBatchSize records through task serialization (~4 MiB/task
+      // warnings at sf0.1). Offsets purged under a slow subscriber fail
+      // the batch, as the reference's memlog stream ends with
+      // ErrOutOfRange: skipping them would lose records silently.
+      val rows = (s until e).map { o =>
+        log.read(o) match {
+          case Right(b) => (o, new String(b, "UTF-8"))
+          case Left(OutOfRange) =>
+            val r = log.range // purges drop a prefix: o up to the new earliest is gone
+            throw LogTail.outOfRange(s, r,
+              s"offsets [$o, ${math.min(e, r.earliest) - 1}] were purged before this subscriber read them")
+          case Left(err) => throw new IllegalStateException(s"log tail: offset $o unreadable ($err)")
+        }
+      }
       val bc = org.apache.spark.sql.SparkSession.active.sparkContext.broadcast(rows.toArray)
       synchronized { shipped.addLast(bc) }
       // split the batch into bounded index slices over the ONE broadcast:

@@ -30,9 +30,12 @@ object Ingest {
 
   /** Ephemeral checkpoint dir for bounded replays. Prefers tmpfs
     * (`/dev/shm`) — the HDFS-backed state store writes per-partition delta
-    * files + commit logs EVERY micro-batch, and fsync-ing those to disk
-    * dominated the streaming bench. Durable pipelines point this at a real
-    * DFS; the state machinery exercised is identical. */
+    * files + commit logs EVERY micro-batch. Their per-file cost is not
+    * fsync: Hadoop's local filesystem forks a `chmod` for each file it
+    * creates when libhadoop is not loaded, on tmpfs as on disk, which is
+    * why [[LocalCheckpointFileManager]] writes them through java.nio.
+    * Durable pipelines point this at a real DFS; the state machinery
+    * exercised is identical. */
   def ephemeralCheckpoint(prefix: String): String = {
     val dir = java.nio.file.Files.createTempDirectory(CheckpointRoot.root, prefix)
     dir.toString

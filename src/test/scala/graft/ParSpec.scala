@@ -47,4 +47,16 @@ class ParSpec extends AnyFunSuite {
       assert(desc2 === None)
     } finally sc.setJobDescription(null)
   }
+
+  test("a wedged async leg cannot hang a failing caller leg past the drain bound") {
+    val wedge = new java.util.concurrent.CountDownLatch(1)
+    val leg   = Par.submit { wedge.await(); 42 } // never released: only an interrupt ends it
+    val t0    = System.nanoTime()
+    val e = intercept[IllegalStateException](
+      Par.callerLeg(throw new IllegalStateException("caller leg"), drainMs = 300L, leg))
+    val waitedMs = (System.nanoTime() - t0) / 1000000L
+    assert(e.getMessage === "caller leg")
+    assert(waitedMs >= 300L && waitedMs < 5000L, s"drain took $waitedMs ms")
+    assert(leg.isCancelled, "the leg still running at the bound is interrupted")
+  }
 }

@@ -1,7 +1,15 @@
 package graft.streaming
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import graft.TestSpark
 import graft.operators.EventLog.{FutureOffset, OutOfRange}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -119,13 +127,16 @@ class StreamingSpec extends AnyFunSuite {
     assert(result.log.size === 0)
   }
 
-  test("ingest honors startingTimestamp (the reference's replay-begin window)") {
-    val spark = TestSpark.spark
-    // midpoint of the sf0.001 time range — via the schema-adaptive ingress,
-    // not a raw read (the on-disk ts encoding is the driver's to change)
-    val mid = graft.Tables.events(spark, "/root/testdata/sf0.001")
+  // midpoint of the sf0.001 time range — via the schema-adaptive ingress,
+  // not a raw read (the on-disk ts encoding is the driver's to change)
+  private def midTimestamp(): String =
+    graft.Tables.events(TestSpark.spark, "/root/testdata/sf0.001")
       .select(expr("timestamp_micros(cast(percentile(unix_micros(ts), 0.5) as long))").cast("string"))
       .head().getString(0)
+
+  test("ingest honors startingTimestamp (the reference's replay-begin window)") {
+    val spark = TestSpark.spark
+    val mid   = midTimestamp()
     val result = Ingest.run(spark, "/root/testdata/sf0.001", maxBatchSize = 500,
       startingTimestamp = Some(mid))
     val n = result.log.size
@@ -149,5 +160,88 @@ class StreamingSpec extends AnyFunSuite {
     val ok = graft.sources.EventFeed.load(
       "/root/testdata/sf0.001/events.parquet", None, maxFeedRows = 1000L)
     assert(ok.length === 1000)
+  }
+
+  test("a scan whose load options differ from the table's loads inline, not the table's prefetch") {
+    import graft.sources.{EventFeedMicroBatchStream, EventFeedTable, FeedPosition}
+    import org.apache.spark.sql.util.CaseInsensitiveStringMap
+    TestSpark.spark // ensure an active session for the feed loads
+    val path = "/root/testdata/sf0.001/events.parquet"
+    def opts(extra: (String, String)*) =
+      new CaseInsensitiveStringMap((("path" -> path) +: extra).toMap.asJava)
+    // the table prefetches the whole feed with its own options
+    val table = new EventFeedTable(opts())
+    def feedRows(scanOpts: CaseInsensitiveStringMap): Long = {
+      val stream = table.newScanBuilder(scanOpts).build().toMicroBatchStream("unused")
+        .asInstanceOf[EventFeedMicroBatchStream]
+      try stream.reportLatestOffset().asInstanceOf[FeedPosition].n finally stream.stop()
+    }
+    assert(feedRows(opts()) === 1000L)
+    // a later startingTimestamp at scan time serves only the later events
+    val n = feedRows(opts("startingTimestamp" -> midTimestamp()))
+    assert(n > 0 && n < 1000)
+    // a tighter envelope at scan time is enforced by the scan's own load
+    val e = intercept[IllegalArgumentException](feedRows(opts("maxFeedRows" -> "999")))
+    assert(e.getMessage.contains("replay envelope"))
+  }
+
+  // --- checkpoint writes go through LocalCheckpointFileManager ---
+  test("stateful aggregation and stream-stream join checkpoints are written without Hadoop .crc files") {
+    val sp = TestSpark.spark
+    import sp.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = sp.sqlContext
+
+    // the session conf reaches the Hadoop conf Spark builds its managers from
+    val probe = new Path(Ingest.ephemeralCheckpoint("graft-ckpt-probe"))
+    assert(CheckpointFileManager.create(probe, sp.sessionState.newHadoopConf())
+      .isInstanceOf[LocalCheckpointFileManager])
+
+    // two micro-batches into a memory sink; returns the checkpoint's files
+    // relative to its root
+    def twoBatches(df: DataFrame, mode: String, name: String)(feed: Int => Unit): Seq[String] = {
+      val ckpt = Ingest.ephemeralCheckpoint(s"graft-$name")
+      val q = df.writeStream.outputMode(mode).format("memory").queryName(name)
+        .option("checkpointLocation", ckpt).start()
+      try (1 to 2).foreach { b => feed(b); q.processAllAvailable() }
+      finally q.stop()
+      val root = Paths.get(ckpt)
+      val s    = Files.walk(root)
+      try s.iterator().asScala.filter(Files.isRegularFile(_)).map(root.relativize(_).toString).toSeq
+      finally s.close()
+    }
+
+    val events = MemoryStream[(Int, Long)]
+    val agg = twoBatches(
+      events.toDF().toDF("k", "v").groupBy("k").agg(sum("v").as("s")), "update", "ckpt_agg") { b =>
+      events.addData((1, b.toLong), (2, 10L * b)); ()
+    }
+    assert(sp.table("ckpt_agg").count() === 4L) // two keys updated in each batch
+
+    val left  = MemoryStream[(Int, String)]
+    val right = MemoryStream[(Int, String)]
+    val join = twoBatches(
+      left.toDF().toDF("k", "l").join(right.toDF().toDF("k", "r"), "k"), "append", "ckpt_join") { b =>
+      left.addData((b, s"l$b")); right.addData((b, s"r$b")); ()
+    }
+    assert(sp.table("ckpt_join").count() === 2L)
+
+    for ((name, files) <- Seq("aggregation" -> agg, "join" -> join)) {
+      Seq("offsets/", "commits/", "state/").foreach { dir =>
+        assert(files.exists(_.startsWith(dir)), s"$name checkpoint has no $dir files: $files")
+      }
+      assert(files.contains("metadata"), s"$name checkpoint has no metadata file")
+      assert(files.exists(f => f.startsWith("state/") && f.endsWith(".delta")))
+      // Hadoop's LocalFileSystem writes a hidden `.<name>.crc` beside every
+      // file it creates; Spark's own state-file checksums (`<name>.crc`,
+      // spark.sql.streaming.checkpoint.fileChecksum.enabled) go through the
+      // manager like any other checkpoint file
+      val hadoopCrc = files.filter { f =>
+        val n = Paths.get(f).getFileName.toString
+        n.startsWith(".") && n.endsWith(".crc")
+      }
+      assert(hadoopCrc.isEmpty,
+        s"$name checkpoint holds Hadoop .crc files, so a writer bypassed " +
+          s"LocalCheckpointFileManager: ${hadoopCrc.mkString(", ")}")
+    }
   }
 }

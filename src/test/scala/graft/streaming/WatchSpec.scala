@@ -24,6 +24,21 @@ class WatchSpec extends AnyFunSuite {
     q.awaitTermination()
   }
 
+  /** Drain a checkpointed watch into `received` through a foreachBatch
+    * sink, which supports checkpoint recovery (the memory sink doesn't). */
+  private def drainInto(
+      received: scala.collection.mutable.ArrayBuffer[String], name: String, log: OffsetLog,
+      ckpt: String, startingOffset: Option[Long] = None): Unit = {
+    val q = Watch.tail(spark, name, log, startingOffset).writeStream
+      .trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", ckpt)
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+        received ++= batch.orderBy("offset").collect().map(_.getString(1)); ()
+      }
+      .start()
+    q.awaitTermination()
+  }
+
   private def values(table: String): Seq[String] = {
     import spark.implicits._
     spark.table(table).orderBy("offset").select("value").as[String].collect().toSeq
@@ -33,19 +48,8 @@ class WatchSpec extends AnyFunSuite {
     val log = new OffsetLog(0, 100)
     (0 until 3).foreach(i => log.write(bytes(i)))
     val ckpt = Ingest.ephemeralCheckpoint("graft-watch-default")
-
-    // foreachBatch sink: supports checkpoint recovery (memory sink doesn't)
     val received = scala.collection.mutable.ArrayBuffer.empty[String]
-    def drainFb(): Unit = {
-      val q = Watch.tail(spark, "w_default", log).writeStream
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          received ++= batch.orderBy("offset").collect().map(_.getString(1)); ()
-        }
-        .start()
-      q.awaitTermination()
-    }
+    def drainFb(): Unit = drainInto(received, "w_default", log, ckpt)
 
     drainFb()
     assert(received.isEmpty) // 3 existing records not replayed
@@ -188,5 +192,25 @@ class WatchSpec extends AnyFunSuite {
     }
     assert(ex.getMessage.contains("invalid offset") ||
       Option(ex.getCause).exists(_.getMessage.contains("invalid offset")))
+  }
+
+  test("a cursor purged between two batches fails the stream instead of skipping records") {
+    val log = new OffsetLog(0, 5)
+    (0 until 3).foreach(i => log.write(bytes(i)))
+    val ckpt     = Ingest.ephemeralCheckpoint("graft-watch-lost")
+    val received = scala.collection.mutable.ArrayBuffer.empty[String]
+    def drainFb(): Unit = drainInto(received, "w_lost", log, ckpt, startingOffset = Some(0L))
+
+    drainFb()
+    assert(received.toSeq === Seq("0", "1", "2")) // the cursor now stands at 3
+
+    // the subscriber is away while the log rolls past its cursor: the log
+    // retains 10..19, so 3..9 are gone before the next batch reads them
+    (3 until 20).foreach(i => log.write(bytes(i)))
+    val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException](drainFb())
+    val msgs = Iterator.iterate(ex: Throwable)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" <- ")
+    assert(msgs.contains("invalid offset: 3 out of range [10, 19] (OutOfRange)"), msgs)
+    assert(msgs.contains("offsets [3, 9] were purged"), msgs)
+    assert(received.toSeq === Seq("0", "1", "2"), "nothing past the gap may be delivered")
   }
 }
